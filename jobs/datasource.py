@@ -30,20 +30,22 @@ source would:
   jobs/orc_read.py docstring). Every filter is returned to Spark as
   well, so Spark re-applies them exactly: the engine tiers prune
   supersets; correctness never depends on them.
-* **Split planning** — ``partitions()`` lists the directory, reads
-  only the ~KB file tails, drops statistics-precluded stripes, and
-  bins surviving stripes into splits of ``split_mb`` (default 64 MB)
-  so a thousand-stripe file fans out across the cluster while tiny
-  files don't each cost a task. Tail reads are threaded driver-side
-  I/O up to ``distributed_planning_threshold`` files (default 4096);
-  past it (or with ``distributed_planning=true``) the driver plans
-  byte-range splits from file SIZES alone — zero tail I/O — and each
-  task resolves + statistics-prunes its own range's stripes
-  (``OrcRangePartition``), so a million-file listing plans at
-  os.stat speed and prunes on the executors. (DSv2 ``partitions()``
-  runs in Spark's planning worker, which has no SparkSession — the
-  scalable move is deferring tail reads to ``read()``, not
-  distributing them from the driver.)
+* **Split planning** — ``partitions()`` lists the directory and
+  calls jobs.orc_read.plan_orc_splits, the same planner read_orc_dir
+  uses: it reads only the ~KB file tails (threaded), drops
+  statistics-precluded stripes, and bins surviving stripes into splits
+  of ``split_mb`` (default 64 MB), each carrying its tail so ``read()``
+  does not fetch it again; a thousand-stripe file fans out across the
+  cluster while tiny files don't each cost a task. Past
+  ``distributed_planning_threshold`` files (default 4096, the
+  planner's DISTRIBUTED_PLANNING_THRESHOLD) or with
+  ``distributed_planning=true`` it plans byte-range splits from file
+  SIZES alone — zero tail I/O — and each task resolves +
+  statistics-prunes its own range's stripes (``OrcRangePartition``),
+  so a million-file listing plans at os.stat speed and prunes on the
+  executors. (DSv2 ``partitions()`` runs in Spark's planning worker,
+  which has no SparkSession — the scalable move is deferring tail
+  reads to ``read()``, not distributing them from the driver.)
 * **Column pruning** — the reader decodes only the fields of the
   schema Spark passes (pass ``.schema(...)`` or ``columns`` to
   project); unprojected columns' stream bytes are never read
@@ -96,7 +98,6 @@ from pyspark.sql.datasource import (
     GreaterThan,
     GreaterThanOrEqual,
     In,
-    InputPartition,
     IsNotNull,
     IsNull,
     LessThan,
@@ -105,6 +106,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
+
+from jobs.orc_read import OrcInputPartition, read_split
 
 _FILTER_OPS = {
     EqualTo: "=",
@@ -155,27 +158,6 @@ def _to_engine_filters(filters: Sequence[Filter]) -> list[tuple]:
         val = tuple(f.value) if op == "in" else f.value
         out.append((col, op, val))
     return out
-
-
-@dataclass
-class OrcInputPartition(InputPartition):
-    """One read split: a run of surviving stripes of one file."""
-    path: str
-    stripes: tuple
-
-
-@dataclass
-class OrcRangePartition(InputPartition):
-    """One distributed-planning split: a byte range [start, end) of
-    one file, planned from the directory listing's file sizes ALONE —
-    zero tail reads on the driver. The task owns the stripes whose
-    StripeInformation.offset falls inside its range (the parquet/Hive
-    split-assignment convention), resolves them from the ~KB tail it
-    reads itself, and prunes statistics-precluded stripes there, so
-    both planning I/O and pruning CPU scale with the executors."""
-    path: str
-    start: int
-    end: int
 
 
 @dataclass
@@ -243,7 +225,7 @@ class OrcEngineDataSource(DataSource):
 
         use_m = self.options.get("use_manifest", "false").lower() == "true"
         files = list_orc_files(self._path(), use_manifest=use_m)
-        if self.options.get("merge_schema", "false").lower() == "true":
+        if _merge_schema(self.options):
             # probe EVERY tail: union-of-fields, widest-of-types
             # (int widening + float->double, orc-core
             # ConvertTreeReader semantics). Threaded here — DSv2
@@ -287,6 +269,10 @@ class OrcEngineDataSource(DataSource):
         return OrcEngineStreamReader(self._path(), schema, self.options)
 
 
+def _merge_schema(options) -> bool:
+    return options.get("merge_schema", "false").lower() == "true"
+
+
 def _parse_option_filters(options) -> list[tuple]:
     """The ``filters`` read option: a JSON list of [column, op,
     literal] triples (conjunction)."""
@@ -315,39 +301,6 @@ def _parse_option_filters(options) -> list[tuple]:
     return out
 
 
-def _apply_filters_exact(tbl, filters: list[tuple]):
-    """Exact arrow-side conjunction filter (SQL null semantics: a
-    null comparison never matches). Dotted names resolve through
-    struct fields."""
-    import pyarrow.compute as pc
-    mask = None
-    for col, op, val in filters:
-        arr = tbl.column(col) if "." not in col else pc.struct_field(
-            tbl.column(col.split(".")[0]), col.split(".")[1:])
-        if op == "is_null":
-            m = pc.is_null(arr)
-        elif op == "not_null":
-            m = pc.is_valid(arr)
-        elif op in ("=", "=="):
-            m = pc.equal(arr, val)
-        elif op == "<":
-            m = pc.less(arr, val)
-        elif op == "<=":
-            m = pc.less_equal(arr, val)
-        elif op == ">":
-            m = pc.greater(arr, val)
-        elif op == ">=":
-            m = pc.greater_equal(arr, val)
-        elif op == "starts_with":
-            m = pc.starts_with(arr, pattern=val)
-        else:  # in
-            import pyarrow as pa
-            m = pc.is_in(arr, value_set=pa.array(list(val)))
-        m = pc.fill_null(m, False)
-        mask = m if mask is None else pc.and_(mask, m)
-    return tbl.filter(mask) if mask is not None else tbl
-
-
 class OrcEngineReader(DataSourceReader):
     def __init__(self, path: str, schema: StructType, options):
         self._path = path
@@ -359,11 +312,9 @@ class OrcEngineReader(DataSourceReader):
     def _all_filters(self) -> list[tuple]:
         return self._filters + self._opt_filters
 
-    def partitions(self) -> Sequence[InputPartition]:
-        from concurrent.futures import ThreadPoolExecutor
-
-        from engine.orc_read import read_orc_tail, stripes_matching
-        from jobs.orc_read import EmptyOrcDirError, list_orc_files
+    def partitions(self) -> Sequence[OrcInputPartition]:
+        from jobs.orc_read import (SPLIT_BYTES, EmptyOrcDirError,
+                                   list_orc_files, plan_orc_splits)
 
         use_m = self._options.get("use_manifest",
                                   "false").lower() == "true"
@@ -378,59 +329,32 @@ class OrcEngineReader(DataSourceReader):
             # manifest naming deleted files) must still raise, or a
             # broken snapshot would read as silently empty.
             return [OrcInputPartition("", ())]
-        target = int(float(self._options.get("split_mb", "64")) * (1 << 20))
-
+        mb = self._options.get("split_mb")
         # distributed planning: above the threshold (or forced by the
-        # option) the driver stops reading tails entirely — it bins
-        # each file into split_mb byte ranges from its SIZE (an
-        # os.stat per file, no I/O on file bytes) and defers stripe
-        # resolution + statistics pruning to the tasks. DSv2
+        # option) the planner stops reading tails entirely and defers
+        # stripe resolution + statistics pruning to the tasks. DSv2
         # partitions() runs in Spark's planning worker where no
         # SparkSession exists, so "distribute the tail reads" can
         # only mean "move them into read()" — which also prunes in
         # parallel, unlike any driver-side plan.
         dp = self._options.get("distributed_planning", "auto").lower()
-        dp_thresh = int(self._options.get(
-            "distributed_planning_threshold", "4096"))
-        if dp == "true" or (dp == "auto" and len(files) > dp_thresh):
-            out = []
-            for p in files:
-                size = os.path.getsize(p)
-                for s in range(0, max(size, 1), target):
-                    out.append(OrcRangePartition(p, s, s + target))
-            return out or [OrcInputPartition(files[0], ())]
-
-        def plan(p: str) -> list[OrcInputPartition]:
-            info = read_orc_tail(p)
-            keep = stripes_matching(info, self._all_filters() or None)
-            splits, run, sz = [], [], 0
-            for i in keep:
-                si = info.stripes[i]
-                run.append(i)
-                sz += si[2] + si[3] + si[4]  # index+data+footer bytes
-                if sz >= target:
-                    splits.append(OrcInputPartition(p, tuple(run)))
-                    run, sz = [], 0
-            if run:
-                splits.append(OrcInputPartition(p, tuple(run)))
-            return splits
-
-        # tail reads are ~KB I/O; thread them (planning, not decode)
-        with ThreadPoolExecutor(max_workers=min(32, len(files))) as ex:
-            planned = list(ex.map(plan, files))
-        out = [s for per_file in planned for s in per_file]
+        if dp == "auto":
+            threshold = self._options.get("distributed_planning_threshold")
+            threshold = None if threshold is None else int(threshold)
+        else:
+            threshold = 0 if dp == "true" else len(files)
+        splits = plan_orc_splits(
+            files, self._all_filters(),
+            int(float(mb) * (1 << 20)) if mb else SPLIT_BYTES, threshold)
         # zero surviving stripes: one empty split keeps the scan valid
-        return out or [OrcInputPartition(files[0], ())]
+        return splits or [OrcInputPartition(files[0], ())]
 
     def read(self, partition: OrcInputPartition) -> Iterator:
-        info = None
-        if isinstance(partition, OrcRangePartition):
-            partition, info = _resolve_range(partition,
-                                             self._all_filters())
-        yield from _read_split(partition, self._schema, self._options,
-                               self._all_filters(),
-                               exact_filters=self._opt_filters,
-                               info=info)
+        yield from read_split(
+            partition, self._schema, self._all_filters(),
+            convention=self._options.get("convention"),
+            allow_missing=_merge_schema(self._options),
+            exact_filters=self._opt_filters)
 
 
 class OrcEnginePushdownReader(OrcEngineReader):
@@ -446,84 +370,6 @@ class OrcEnginePushdownReader(OrcEngineReader):
         # hand every filter back: the engine tiers prune (supersets),
         # Spark's re-evaluation keeps the result exact
         return filters
-
-
-def _resolve_range(partition: OrcRangePartition,
-                   filters: list[tuple]) -> OrcInputPartition:
-    """Task-side half of distributed planning: read the ~KB tail,
-    claim the stripes whose offset lies in [start, end), drop the
-    statistics-precluded ones (the same stripes_matching tier the
-    driver-side planner applies), and hand the equivalent stripe
-    split (plus the parsed tail, so the decode reads it once) to
-    _read_split."""
-    from engine.orc_read import read_orc_tail, stripes_matching
-    info = read_orc_tail(partition.path)
-    keep = set(stripes_matching(info, filters or None))
-    stripes = tuple(
-        i for i, si in enumerate(info.stripes)
-        if i in keep and partition.start <= si[1] < partition.end)
-    return OrcInputPartition(partition.path, stripes), info
-
-
-def _read_split(partition: OrcInputPartition, schema: StructType,
-                options, filters: list[tuple],
-                exact_filters: list[tuple] = (),
-                info=None) -> Iterator:
-    """Task-side split decode shared by the batch and stream readers:
-    engine stripe-range read (``filters`` prune row groups as a
-    superset) -> (optional) schema-evolution null-fill -> EXACT
-    arrow-side application of ``exact_filters`` (the option-provided
-    conjunction Spark knows nothing about) -> cast to Spark's Arrow
-    convention -> RecordBatches."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from engine.orc_read import read_orc_stripes, read_orc_tail
-
-    target = to_arrow_schema(schema)
-    if not partition.stripes:
-        yield from target.empty_table().to_batches()
-        return
-    merge = options.get("merge_schema", "false").lower() == "true"
-    if info is None:
-        info = read_orc_tail(partition.path)
-    names = list(target.names)
-    got = info.types[0].field_names
-    absent = [c for c in names if c not in got]
-    if absent and not merge:
-        raise ValueError(
-            f"{partition.path}: ORC schema {got} lacks projected "
-            f"{names}; set merge_schema=true to null-fill columns "
-            "this file predates")
-    # an option filter may reference a non-projected column: decode
-    # its top-level root too, filter exactly, then drop it. A filter
-    # on a column the file PREDATES sees null for every row: is_null
-    # is vacuously true (drop the conjunct), everything else —
-    # comparisons AND not_null — matches no row (empty split).
-    absent_col = [f for f in exact_filters
-                  if (f[0] if f[0] in got else f[0].split(".")[0])
-                  not in got]
-    if any(f[1] != "is_null" for f in absent_col):
-        yield from target.empty_table().to_batches()
-        return
-    exact_filters = [f for f in exact_filters if f not in absent_col]
-    roots = [f[0] if f[0] in got else f[0].split(".")[0]
-             for f in exact_filters]
-    # dict.fromkeys: two filters on one non-projected column (the
-    # classic range filter lo <= c <= hi) must add its root ONCE — a
-    # duplicated projection column makes tbl.column() ambiguous
-    extra = list(dict.fromkeys(r for r in roots if r not in names))
-    tbl = read_orc_stripes(
-        partition.path, list(partition.stripes),
-        columns=[c for c in names if c not in absent] + extra,
-        convention=options.get("convention"),
-        info=info, filters=filters or None)
-    if exact_filters:
-        tbl = _apply_filters_exact(tbl, exact_filters)
-    for c in absent:
-        tbl = tbl.append_column(
-            target.field(c), pa.nulls(len(tbl), target.field(c).type))
-    yield from tbl.select(names).cast(target).to_batches()
 
 
 def _write_part(batches: Iterator, out_dir: str, options,
@@ -693,7 +539,8 @@ class OrcEngineStreamReader(DataSourceStreamReader):
         self._served = off
         return off
 
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
+    def partitions(self, start: dict,
+                   end: dict) -> Sequence[OrcInputPartition]:
         from engine.orc_read import read_orc_tail
 
         end_t, end_b = end["t"], set(end["boundary"])
@@ -703,12 +550,16 @@ class OrcEngineStreamReader(DataSourceStreamReader):
                 continue  # published after this batch's end offset
             p = os.path.join(self._dir, f)
             info = read_orc_tail(p)
-            splits.append(OrcInputPartition(p, tuple(range(len(info.stripes)))))
+            splits.append(OrcInputPartition(
+                p, tuple(range(len(info.stripes))), info.num_rows,
+                bytes(info.data)))
         # Spark requires >=1 partition per batch; an empty marker reads 0 rows
         return splits or [OrcInputPartition("", ())]
 
     def read(self, partition: OrcInputPartition) -> Iterator:
-        yield from _read_split(partition, self._schema, self._options, [])
+        yield from read_split(partition, self._schema, [],
+                              convention=self._options.get("convention"),
+                              allow_missing=_merge_schema(self._options))
 
     def commit(self, end: dict) -> None:
         # offsets derive from the listing; remember the committed end

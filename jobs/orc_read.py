@@ -1,20 +1,28 @@
 """Distributed ORC file ingestion (SURVEY.md §2.5 M6 as a *file*
 surface, the read twin of jobs/orc_write.py).
 
-Two-stage plan, nothing funnels through the driver:
+One Spark stage, no shuffle, and no row passes through the driver:
 
-1. **Plan** — the file list is parallelized and each task range-reads
-   only the ~KB file tails (engine.orc_read.read_orc_tail), emitting
-   one split row per stripe ``(path, stripe, n_rows)``. The driver
-   opens exactly ONE tail, to learn the schema. At 100 TB this is the
-   shape that matters: a million-file listing costs the cluster a
-   million tail reads (KBs each), not a million whole-file reads, and
-   no per-file work happens on the driver.
-2. **Decode** — splits are spread round-robin across the target
-   parallelism; each task groups its splits by file and range-reads
-   just those stripes' bytes (engine.orc_read.read_orc_stripes), so a
-   file split 100 ways costs each task 1/100th of its bytes. Column
-   projection skips unprojected streams entirely (never inflated).
+1. **Plan** — plan_orc_splits, the one planner behind both read_orc_dir
+   and the orcx source's partitions() (jobs/datasource.py). Up to
+   DISTRIBUTED_PLANNING_THRESHOLD files (4096) the driver range-reads
+   only the ~KB file tails, with threads, drops statistics-precluded
+   stripes (engine.orc_read.stripes_matching) and bins each file's
+   surviving stripes into splits of ~SPLIT_BYTES; every split carries
+   the raw tail it was planned from. Past the threshold it reads no
+   tail at all: each file becomes SPLIT_BYTES byte ranges planned from
+   its size, and the task reads its own tail, claims the stripes whose
+   offset falls in its range and prunes them (resolve_range) — a
+   million-file listing plans at os.stat speed.
+2. **Decode** — the split list rides in the task closure and
+   ``spark.range(n_splits, numPartitions=t)`` hands task k the
+   contiguous index run [k·n/t, (k+1)·n/t): t = min(splits,
+   parallelism) tasks, at most ⌈n/t⌉ splits each, no shuffle. Each
+   task parses the shipped tail instead of reading it again and
+   range-reads just its stripes' bytes
+   (engine.orc_read.read_orc_stripes), so a file split 100 ways costs
+   each task 1/100th of its bytes. Column projection skips unprojected
+   streams entirely (never inflated).
 
 The decoders are this engine's vectorized codecs, so files written by
 ORC C++ (pyarrow), orc-core Java (spark.write.orc), or
@@ -30,14 +38,18 @@ from __future__ import annotations
 
 import glob
 import os
+from dataclasses import dataclass, field
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.datasource import InputPartition
 from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 from jobs.table_io import _require_local
 
-SPLIT_DDL = "path string, stripe bigint, n_rows bigint"
+# above this many files the planner reads no tail (plan_orc_splits)
+DISTRIBUTED_PLANNING_THRESHOLD = 4096
+SPLIT_BYTES = 64 << 20
 
 
 class EmptyOrcDirError(FileNotFoundError):
@@ -91,7 +103,7 @@ def list_orc_files(path: str, use_manifest: bool = False) -> list[str]:
         if not found:
             # fail loud here, once, instead of the obscure downstream
             # crashes an empty listing used to cause (files[0] Index-
-            # Error, ThreadPoolExecutor(max_workers=0), repartition(0))
+            # Error, ThreadPoolExecutor(max_workers=0))
             raise EmptyOrcDirError(
                 f"directory {path!r} contains no .orc files")
         return found
@@ -144,37 +156,23 @@ def merged_orc_schema(files: list[str],
     to int64, float to double; orc-core ConvertTreeReader semantics).
     Field order is first-seen. Probing reads only the ~KB tails:
     threaded driver-side below ``distributed_threshold`` files, as a
-    one-stage Spark job above it (one tail read per task row, tiny
+    one-stage Spark job above it (one tail read per file, tiny
     serialized schemas back to the driver) so a million-file listing
     never serializes through driver threads."""
     from engine.orc_read import read_orc_tail
     if spark is not None and len(files) > distributed_threshold:
-        paths = spark.createDataFrame([(f,) for f in files],
-                                      "path string")
-        n_plan = max(1, min(len(files),
-                            spark.sparkContext.defaultParallelism))
-
-        def tails(batches):
+        def probe(p):
             import pyarrow as pa
 
             from engine.orc_read import read_orc_tail
-            for batch in batches:
-                for p in batch.column("path").to_pylist():
-                    buf = read_orc_tail(p).schema().serialize()
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array([p], type=pa.large_string()),
-                         pa.array([buf.to_pybytes()],
-                                  type=pa.large_binary())],
-                        names=["path", "schema"])
+            buf = read_orc_tail(p).schema().serialize()
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([buf.to_pybytes()], type=pa.large_binary())],
+                names=["schema"])
 
-        rows = (paths.repartition(n_plan)
-                .mapInArrow(tails, "path string, schema binary")
-                .collect())
-        # collect() order follows task/partition order, not the file
-        # listing: re-sort by the input list so "first-seen" field
-        # order (and thus the merged schema) is deterministic
-        order = {p: i for i, p in enumerate(files)}
-        rows.sort(key=lambda r: order[r["path"]])
+        # rows come back in file-list order (_map_in_tasks), so the
+        # "first-seen" field order of the merged schema is deterministic
+        rows = _map_in_tasks(spark, files, probe, "schema binary").collect()
         schemas = [pa.ipc.read_schema(pa.py_buffer(bytes(r["schema"])))
                    for r in rows]
     else:
@@ -196,37 +194,220 @@ def merged_orc_schema(files: list[str],
     return pa.schema(list(fields.items()))
 
 
-def plan_orc_splits(spark: SparkSession, files: list[str],
-                    filters: list[tuple] | None = None) -> DataFrame:
-    """Stage 1: distributed tail reads -> one row per stripe that MAY
-    match ``filters`` (see engine.orc_read.stripes_matching — pruning
-    happens against the per-stripe statistics in each file's Metadata
-    section, so pruned stripes cost ZERO stripe-byte reads; a file
-    without statistics keeps all its stripes). The lazy result is
-    safe to cache/checkpoint as a scan manifest."""
-    paths = spark.createDataFrame([(f,) for f in files], "path string")
-    n_plan = max(1, min(len(files), spark.sparkContext.defaultParallelism))
+@dataclass
+class OrcInputPartition(InputPartition):
+    """One read split: a run of surviving stripes of one file, their
+    row count, and the raw file tail the planner parsed them from
+    (None when the planner read none), so the task never reads that
+    tail again."""
+    path: str
+    stripes: tuple
+    n_rows: int = 0
+    tail: bytes | None = field(default=None, repr=False)
 
-    def tails(batches):
-        import pyarrow as pa
+    def tail_info(self):
+        """The parsed tail: from the shipped bytes, else read."""
+        from engine.orc_read import OrcFileInfo, read_orc_tail
+        if self.tail is None:
+            return read_orc_tail(self.path)
+        info = OrcFileInfo(memoryview(self.tail))
+        info.tail_only = True
+        return info
 
-        from engine.orc_read import read_orc_tail, stripes_matching
+
+@dataclass
+class OrcRangePartition(InputPartition):
+    """One distributed-planning split: a byte range [start, end) of
+    one file, planned from the directory listing's file sizes ALONE —
+    zero tail reads on the driver. The task owns the stripes whose
+    StripeInformation.offset falls inside its range (the parquet/Hive
+    split-assignment convention), resolves them from the ~KB tail it
+    reads itself, and prunes statistics-precluded stripes there, so
+    both planning I/O and pruning CPU scale with the executors."""
+    path: str
+    start: int
+    end: int
+
+
+def plan_orc_splits(files: list[str],
+                    filters: list[tuple] | None = None,
+                    split_bytes: int = SPLIT_BYTES,
+                    threshold: int | None = None) -> list:
+    """The ORC read planner shared by read_orc_dir and the orcx
+    source's partitions(). Returns [] when no stripe survives.
+
+    Up to ``threshold`` files (default DISTRIBUTED_PLANNING_THRESHOLD)
+    it reads every ~KB tail, with threads, keeps the stripes that MAY
+    match ``filters`` (engine.orc_read.stripes_matching — per-stripe
+    Metadata statistics, so pruned stripes and fully-pruned files cost
+    no stripe byte and no task; a file without statistics keeps all
+    its stripes) and bins each file's survivors into OrcInputPartition
+    runs of ~``split_bytes`` stripe bytes, each carrying its tail.
+    Past the threshold it reads no tail: every file becomes
+    ``split_bytes`` OrcRangePartition byte ranges from its size, which
+    the task resolves and prunes itself (resolve_range)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from engine.orc_read import read_orc_tail, stripes_matching
+    if threshold is None:
+        threshold = DISTRIBUTED_PLANNING_THRESHOLD
+    if len(files) > threshold:
+        return [OrcRangePartition(p, s, s + split_bytes) for p in files
+                for s in range(0, max(os.path.getsize(p), 1),
+                               split_bytes)]
+
+    def plan(p: str) -> list[OrcInputPartition]:
+        info = read_orc_tail(p)
+        tail = bytes(info.data)
+        runs, run, sz = [], [], 0
+        for i in stripes_matching(info, filters or None):
+            si = info.stripes[i]
+            run.append(i)
+            sz += si[2] + si[3] + si[4]  # index+data+footer bytes
+            if sz >= split_bytes:
+                runs.append(run)
+                run, sz = [], 0
+        if run:
+            runs.append(run)
+        return [OrcInputPartition(p, tuple(r),
+                                  sum(info.stripes[i][5] for i in r), tail)
+                for r in runs]
+
+    # tail reads are ~KB I/O; threads overlap them
+    with ThreadPoolExecutor(max_workers=max(1, min(32, len(files)))) as ex:
+        return [s for per_file in ex.map(plan, files) for s in per_file]
+
+
+def resolve_range(split: OrcRangePartition, filters: list[tuple] | None
+                  ) -> tuple[OrcInputPartition, object]:
+    """Task-side half of distributed planning: read the ~KB tail,
+    claim the stripes whose offset lies in [start, end), drop the
+    statistics-precluded ones (the same stripes_matching tier the
+    driver-side planner applies), and return the equivalent stripe
+    split plus the parsed tail, so the decode reads it once."""
+    from engine.orc_read import read_orc_tail, stripes_matching
+    info = read_orc_tail(split.path)
+    keep = set(stripes_matching(info, filters or None))
+    stripes = tuple(i for i, si in enumerate(info.stripes)
+                    if i in keep and split.start <= si[1] < split.end)
+    return OrcInputPartition(
+        split.path, stripes,
+        sum(info.stripes[i][5] for i in stripes)), info
+
+
+def read_split(split: OrcInputPartition | OrcRangePartition, schema,
+               filters: list[tuple] | None = None,
+               convention: str | None = None,
+               allow_missing: bool = False,
+               exact_filters: list[tuple] = ()):
+    """Task-side decode of one planned split, shared by read_orc_dir
+    and the orcx batch and stream readers: byte range -> its stripes
+    (resolve_range) -> engine stripe-range read (``filters`` prune row
+    groups as a superset) -> null-fill of columns the file predates
+    (only with ``allow_missing``) -> EXACT arrow-side application of
+    ``exact_filters`` (a conjunction Spark knows nothing about) ->
+    cast to the Spark ``schema``'s Arrow convention -> RecordBatches.
+    ``convention``: pre-1970 timestamp convention (default per file)."""
+    from engine.orc_read import read_orc_stripes
+
+    # Spark's own arrow convention (us timestamps, utf8 not
+    # large_utf8) — each stripe batch is cast into it
+    target = to_arrow_schema(schema)
+    info = None
+    if isinstance(split, OrcRangePartition):
+        split, info = resolve_range(split, filters)
+    if not split.stripes:
+        yield from target.empty_table().to_batches()
+        return
+    info = info or split.tail_info()
+    names = list(target.names)
+    got = info.types[0].field_names
+    absent = [c for c in names if c not in got]
+    if absent and not allow_missing:
+        raise ValueError(
+            f"{split.path}: ORC schema {got} lacks projected {names}; "
+            "to null-fill columns this file predates, pass "
+            "allow_missing_columns=True (read_orc_dir) or set "
+            "merge_schema=true (orcx)")
+    # an option filter may reference a non-projected column: decode
+    # its top-level root too, filter exactly, then drop it. A filter
+    # on a column the file PREDATES sees null for every row: is_null
+    # is vacuously true (drop the conjunct), everything else —
+    # comparisons AND not_null — matches no row (empty split).
+    absent_col = [f for f in exact_filters
+                  if (f[0] if f[0] in got else f[0].split(".")[0])
+                  not in got]
+    if any(f[1] != "is_null" for f in absent_col):
+        yield from target.empty_table().to_batches()
+        return
+    exact_filters = [f for f in exact_filters if f not in absent_col]
+    roots = [f[0] if f[0] in got else f[0].split(".")[0]
+             for f in exact_filters]
+    # dict.fromkeys: two filters on one non-projected column (the
+    # classic range filter lo <= c <= hi) must add its root ONCE — a
+    # duplicated projection column makes tbl.column() ambiguous
+    extra = list(dict.fromkeys(r for r in roots if r not in names))
+    tbl = read_orc_stripes(
+        split.path, list(split.stripes),
+        columns=[c for c in names if c not in absent] + extra,
+        convention=convention, info=info, filters=filters or None)
+    if exact_filters:
+        tbl = _apply_filters_exact(tbl, exact_filters)
+    for c in absent:
+        tbl = tbl.append_column(
+            target.field(c), pa.nulls(len(tbl), target.field(c).type))
+    yield from tbl.select(names).cast(target).to_batches()
+
+
+def _apply_filters_exact(tbl, filters: list[tuple]):
+    """Exact arrow-side conjunction filter (SQL null semantics: a
+    null comparison never matches). Dotted names resolve through
+    struct fields."""
+    import pyarrow.compute as pc
+    mask = None
+    for col, op, val in filters:
+        arr = tbl.column(col) if "." not in col else pc.struct_field(
+            tbl.column(col.split(".")[0]), col.split(".")[1:])
+        if op == "is_null":
+            m = pc.is_null(arr)
+        elif op == "not_null":
+            m = pc.is_valid(arr)
+        elif op in ("=", "=="):
+            m = pc.equal(arr, val)
+        elif op == "<":
+            m = pc.less(arr, val)
+        elif op == "<=":
+            m = pc.less_equal(arr, val)
+        elif op == ">":
+            m = pc.greater(arr, val)
+        elif op == ">=":
+            m = pc.greater_equal(arr, val)
+        elif op == "starts_with":
+            m = pc.starts_with(arr, pattern=val)
+        else:  # in
+            m = pc.is_in(arr, value_set=pa.array(list(val)))
+        m = pc.fill_null(m, False)
+        mask = m if mask is None else pc.and_(mask, m)
+    return tbl.filter(mask) if mask is not None else tbl
+
+
+def _map_in_tasks(spark: SparkSession, items: list, fn, schema,
+                  parallelism: int | None = None) -> DataFrame:
+    """``mapInArrow`` of ``fn(item)`` (an iterator of RecordBatches)
+    over ``items`` with no shuffle: the list rides in the task closure
+    and spark.range hands task k the contiguous index run
+    [k·n/t, (k+1)·n/t), so t = min(n, parallelism) tasks get at most
+    ⌈n/t⌉ items each and output rows follow the list order."""
+    n_tasks = max(1, min(len(items), parallelism
+                         or spark.sparkContext.defaultParallelism))
+
+    def run(batches):
         for batch in batches:
-            for p in batch.column("path").to_pylist():
-                info = read_orc_tail(p)
-                keep = stripes_matching(info, filters)
-                # type= matters: for a fully-pruned file keep == [] and
-                # an untyped pa.array([]) infers null type, producing a
-                # batch whose schema differs from sibling batches
-                # (ArrowInvalid at the mapInArrow writer)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([p] * len(keep), type=pa.string()),
-                     pa.array(keep, type=pa.int64()),
-                     pa.array([info.stripes[i][5] for i in keep],
-                              type=pa.int64())],
-                    names=["path", "stripe", "n_rows"])
+            for i in batch.column(0).to_pylist():
+                yield from fn(items[i])
 
-    return paths.repartition(n_plan).mapInArrow(tails, SPLIT_DDL)
+    return spark.range(len(items), numPartitions=n_tasks) \
+        .mapInArrow(run, schema)
 
 
 def read_orc_dir_stats(spark: SparkSession, path: str,
@@ -292,57 +473,47 @@ def read_orc_dir_stats(spark: SparkSession, path: str,
     ddl = ", ".join(
         f"{f.name} {from_arrow_schema(pa.schema([f]))[0].dataType.simpleString()}"
         for f in out_schema)
-    paths = spark.createDataFrame([(f,) for f in files], "path string")
-    n_plan = max(1, min(len(files), spark.sparkContext.defaultParallelism))
 
-    def tails(batches):
+    def stats(p):
         import pyarrow as pa
 
         from engine.orc_read import read_orc_tail
-        for batch in batches:
-            for p in batch.column("path").to_pylist():
-                info = read_orc_tail(p)
-                fs = info.file_stats()
-                sch = info.schema()
-                arrs = [pa.array([p], type=pa.string()),
-                        pa.array([info.num_rows], type=pa.int64())]
-                for c in columns:
-                    # flattened ids: root=0, top-level col i -> subtree
-                    # root at root.subtypes[i]. A schema-evolved file
-                    # missing the column yields typed nulls (its
-                    # n_rows still counts) — get_field_index returns
-                    # -1 there, which would silently index the LAST
-                    # column's stats
-                    j = sch.get_field_index(c)
-                    if j < 0:
-                        st = {}
-                    else:
-                        fid = info.types[0].subtypes[j]
-                        st = (fs[fid] if fs and fid < len(fs)
-                              else {}) or {}
-                    typ = out_schema.field(f"min_{c}").type
-                    for key in ("min", "max"):
-                        v = st.get(key)
-                        if v is not None and pa.types.is_date32(typ):
-                            arr = pa.array([v], type=pa.int32()) \
-                                .cast(pa.date32())
-                        else:
-                            arr = pa.array([v], type=typ)
-                        arrs.append(arr)
-                for c in sums:
-                    j = sch.get_field_index(c)
-                    st = {}
-                    if j >= 0:
-                        fid = info.types[0].subtypes[j]
-                        st = (fs[fid] if fs and fid < len(fs)
-                              else {}) or {}
-                    arrs.append(pa.array(
-                        [st.get("sum")],
-                        type=out_schema.field(f"sum_{c}").type))
-                yield pa.RecordBatch.from_arrays(
-                    arrs, schema=out_schema)
+        info = read_orc_tail(p)
+        fs = info.file_stats()
+        sch = info.schema()
+        arrs = [pa.array([p], type=pa.string()),
+                pa.array([info.num_rows], type=pa.int64())]
+        for c in columns:
+            # flattened ids: root=0, top-level col i -> subtree root
+            # at root.subtypes[i]. A schema-evolved file missing the
+            # column yields typed nulls (its n_rows still counts) —
+            # get_field_index returns -1 there, which would silently
+            # index the LAST column's stats
+            j = sch.get_field_index(c)
+            if j < 0:
+                st = {}
+            else:
+                fid = info.types[0].subtypes[j]
+                st = (fs[fid] if fs and fid < len(fs) else {}) or {}
+            typ = out_schema.field(f"min_{c}").type
+            for key in ("min", "max"):
+                v = st.get(key)
+                if v is not None and pa.types.is_date32(typ):
+                    arr = pa.array([v], type=pa.int32()).cast(pa.date32())
+                else:
+                    arr = pa.array([v], type=typ)
+                arrs.append(arr)
+        for c in sums:
+            j = sch.get_field_index(c)
+            st = {}
+            if j >= 0:
+                fid = info.types[0].subtypes[j]
+                st = (fs[fid] if fs and fid < len(fs) else {}) or {}
+            arrs.append(pa.array([st.get("sum")],
+                                 type=out_schema.field(f"sum_{c}").type))
+        yield pa.RecordBatch.from_arrays(arrs, schema=out_schema)
 
-    return paths.repartition(n_plan).mapInArrow(tails, ddl)
+    return _map_in_tasks(spark, files, stats, ddl)
 
 
 def read_orc_dir(spark: SparkSession, path: str,
@@ -386,6 +557,13 @@ def read_orc_dir(spark: SparkSession, path: str,
     (and pruned from the result); a dotted filter column
     (``meta.score``) prunes on the nested field's own statistics and
     projects its top-level root struct.
+
+    One Spark stage, no shuffle (module docstring): plan_orc_splits
+    plans on the driver — threaded tail reads and stripe pruning up to
+    DISTRIBUTED_PLANNING_THRESHOLD files, tail-free byte ranges the
+    tasks resolve past it — and the splits go, in list order, to
+    min(len(splits), ``parallelism``) decode tasks (default the
+    session's default parallelism), at most ⌈splits/tasks⌉ each.
     """
     files = list_orc_files(path, use_manifest=use_manifest)
     from engine.orc_read import read_orc_tail
@@ -413,45 +591,13 @@ def read_orc_dir(spark: SparkSession, path: str,
     # reader is a drop-in for spark.read.orc on the same files
     spark_schema = from_arrow_schema(arrow_schema,
                                      prefer_timestamp_ntz=False)
-    # Spark's own arrow convention (us timestamps, utf8 not
-    # large_utf8) — the kernel casts each stripe batch into it
-    target = to_arrow_schema(spark_schema)
-    names = arrow_schema.names
+    splits = plan_orc_splits(files, filters)
 
-    splits = plan_orc_splits(spark, files, filters)
-    n_dec = parallelism or spark.sparkContext.defaultParallelism
+    def decode(split):
+        return read_split(split, spark_schema, filters, convention,
+                          allow_missing_columns)
 
-    def decode(batches):
-        import pyarrow as pa
-
-        from engine.orc_read import read_orc_stripes, read_orc_tail
-        by_path: dict[str, list[int]] = {}
-        for batch in batches:
-            for row in batch.to_pylist():
-                by_path.setdefault(row["path"], []).append(row["stripe"])
-        for p, stripes in sorted(by_path.items()):
-            info = read_orc_tail(p)
-            got = info.types[0].field_names
-            absent = [c for c in names if c not in got]
-            if absent and not allow_missing_columns:
-                raise ValueError(
-                    f"{p}: ORC schema {got} lacks projected {names}; "
-                    "pass allow_missing_columns=True to null-fill "
-                    "columns this file predates")
-            tbl = read_orc_stripes(p, sorted(stripes),
-                                   columns=[c for c in names
-                                            if c not in absent],
-                                   convention=convention, info=info,
-                                   filters=filters)
-            for c in absent:
-                # typed nulls at the probed schema's type: the standard
-                # added-column semantics (rows predate the column)
-                tbl = tbl.append_column(
-                    target.field(c),
-                    pa.nulls(len(tbl), target.field(c).type))
-            yield from tbl.select(names).cast(target).to_batches()
-
-    out = splits.repartition(n_dec).mapInArrow(decode, spark_schema)
+    out = _map_in_tasks(spark, splits, decode, spark_schema, parallelism)
     if filters:
         out = out.where(_filter_column(filters))
     if out_columns is not None and out_columns != columns:

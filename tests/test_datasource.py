@@ -184,8 +184,8 @@ def test_distributed_planning_parity(spark_ds, orc_dir):
 def test_distributed_planning_partitions_are_ranges(orc_dir):
     """The planner itself: range splits cover every file without a
     single tail read, and each stripe lands in exactly one range."""
-    from jobs.datasource import (OrcEngineReader, OrcRangePartition,
-                                 _resolve_range)
+    from jobs.datasource import OrcEngineReader
+    from jobs.orc_read import OrcRangePartition, resolve_range
     reader = OrcEngineReader(orc_dir, None, {
         "distributed_planning": "true", "split_mb": "0.01"})
     parts = reader.partitions()
@@ -204,11 +204,41 @@ def test_distributed_planning_partitions_are_ranges(orc_dir):
         assert all(a[1] == b[0] for a, b in zip(spans, spans[1:]))
         assert spans[-1][1] >= os.path.getsize(path)
     for p in parts:
-        resolved, info = _resolve_range(p, [])
+        resolved, info = resolve_range(p, [])
         claimed[p.path] += len(resolved.stripes)
     for path, n in claimed.items():
         from engine.orc_read import read_orc_tail
         assert n == len(read_orc_tail(path).stripes)
+
+
+@pytest.mark.parametrize("threshold", [4096, 1])
+def test_read_orc_dir_and_orcx_plan_identical_splits(spark_ds, orc_dir,
+                                                     monkeypatch,
+                                                     threshold):
+    """read_orc_dir and orcx partitions() plan the same splits through
+    the one shared planner, tail-read and stripe-pruned below the
+    distributed-planning threshold and as byte ranges above it, and
+    read_orc_dir stays exact on both sides."""
+    import jobs.orc_read as jor
+    from jobs.datasource import OrcEngineReader
+    monkeypatch.setattr(jor, "DISTRIBUTED_PLANNING_THRESHOLD", threshold)
+    planned = []
+    plan = jor.plan_orc_splits
+    monkeypatch.setattr(jor, "plan_orc_splits",
+                        lambda *a, **k: planned.append(plan(*a, **k))
+                        or planned[-1])
+    filters = [("n_tok", ">=", 1200)]
+    got = jor.read_orc_dir(spark_ds, orc_dir, filters=filters)
+    orcx = OrcEngineReader(orc_dir, None, {
+        "filters": json.dumps([list(f) for f in filters])}).partitions()
+    assert planned[0] == orcx
+    kind = jor.OrcRangePartition if threshold == 1 else jor.OrcInputPartition
+    assert orcx and all(isinstance(s, kind) for s in orcx)
+    if threshold > 1:  # stripes pruned on the driver: 1200.. is stripe 2+
+        assert [(os.path.basename(s.path), s.stripes) for s in orcx] \
+            == [("part-2.orc", (2, 3, 4))]
+    assert sorted(r["n_tok"] for r in got.collect()) == \
+        list(range(1200, 1500))
 
 
 def test_merge_schema_type_widening(spark_ds, tmp_path):

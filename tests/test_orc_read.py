@@ -189,9 +189,9 @@ def test_stripe_pruning_reads_java_stats(spark):
        .orc(out))
     files = sorted(os.path.join(out, p) for p in os.listdir(out)
                    if p.startswith("part-") and not p.endswith(".crc"))
-    total = plan_orc_splits(spark, files).count()
-    pruned = plan_orc_splits(spark, files,
-                             [("id", ">=", n - 5000)]).count()
+    total = sum(len(s.stripes) for s in plan_orc_splits(files))
+    pruned = sum(len(s.stripes) for s in
+                 plan_orc_splits(files, [("id", ">=", n - 5000)]))
     assert pruned < total
     got = read_orc_dir(spark, out, columns=["s"],
                        filters=[("id", ">=", n - 5000)])
@@ -203,9 +203,10 @@ def test_stripe_pruning_reads_java_stats(spark):
 
 def test_fully_pruned_file_emits_typed_empty_batch(spark):
     """A range-sorted multi-file layout where the filter statistics-
-    prunes EVERY stripe of some files: plan_orc_splits must still emit
-    schema-consistent (string-typed path) batches for those files —
-    the round-3 ArrowInvalid regression (jobs/orc_read.py tails)."""
+    prunes EVERY stripe of some files: plan_orc_splits leaves those
+    files out of the splits, and the read still returns exactly the
+    matching rows, typed (the decode stage once hit ArrowInvalid on
+    the empty batches a fully-pruned file produced)."""
     from jobs.orc_read import plan_orc_splits, read_orc_dir
     from pyspark.sql import functions as F
     n = 4000
@@ -219,8 +220,8 @@ def test_fully_pruned_file_emits_typed_empty_batch(spark):
     filters = [("id", ">=", n - 100)]
     files = sorted(os.path.join(out, p) for p in os.listdir(out)
                    if p.startswith("part-") and not p.endswith(".crc"))
-    splits = plan_orc_splits(spark, files, filters).collect()
-    assert {r["path"] for r in splits} < set(files)  # some file pruned
+    splits = plan_orc_splits(files, filters)
+    assert {s.path for s in splits} < set(files)  # some file pruned
     got = read_orc_dir(spark, out, columns=["id", "s"], filters=filters)
     assert got.count() == 100
     assert got.agg(F.min("id")).first()[0] == n - 100
@@ -311,14 +312,35 @@ def test_distributed_read_projection_and_plan(spark, java_orc_dir):
     from jobs.orc_read import plan_orc_splits, read_orc_dir
     df, files = java_orc_dir
     out_dir = os.path.dirname(files[0])
-    splits = plan_orc_splits(spark, files).collect()
-    assert {s["path"] for s in splits} == set(files)
-    assert sum(s["n_rows"] for s in splits) == df.count()
+    splits = plan_orc_splits(files)
+    assert {s.path for s in splits} == set(files)
+    assert sum(s.n_rows for s in splits) == df.count()
     got = read_orc_dir(spark, out_dir, columns=["doc_id", "val"])
     assert got.columns == ["doc_id", "val"]
     assert got.count() == df.count()
     assert got.agg({"val": "sum"}).collect()[0][0] == \
         df.agg({"val": "sum"}).collect()[0][0]
+
+
+def test_read_orc_dir_is_one_stage_one_task_per_stripe(spark, tmp_path):
+    """Four single-stripe files plan four splits that go, without any
+    Exchange, to four distinct decode tasks."""
+    from pyspark.sql import functions as F
+
+    from jobs.orc_read import read_orc_dir
+    for i in range(4):
+        write_orc(pa.table({"id": pa.array(range(i * 100, i * 100 + 100),
+                                           type=pa.int64())}),
+                  str(tmp_path / f"part-{i}.orc"))
+    df = read_orc_dir(spark, str(tmp_path), parallelism=4)
+    assert "Exchange" not in \
+        df._jdf.queryExecution().executedPlan().toString()
+    pids: dict[int, set] = {}
+    for r in df.select("id", F.spark_partition_id().alias("pid")).collect():
+        pids.setdefault(r["id"] // 100, set()).add(r["pid"])
+    assert sorted(pids) == [0, 1, 2, 3]
+    assert all(len(p) == 1 for p in pids.values())
+    assert len(set.union(*pids.values())) == 4
 
 
 def test_distributed_read_of_own_writer(spark):
@@ -802,9 +824,9 @@ def test_nested_filter_distributed_java_writer(spark):
        .orc(out))
     files = sorted(os.path.join(out, p) for p in os.listdir(out)
                    if p.startswith("part-") and not p.endswith(".crc"))
-    total = plan_orc_splits(spark, files).count()
-    pruned = plan_orc_splits(
-        spark, files, [("meta.score", ">=", n - 4000)]).count()
+    total = sum(len(s.stripes) for s in plan_orc_splits(files))
+    pruned = sum(len(s.stripes) for s in plan_orc_splits(
+        files, [("meta.score", ">=", n - 4000)]))
     assert pruned < total
     got = read_orc_dir(spark, out, columns=["meta"],
                        filters=[("meta.score", ">=", n - 4000)])
