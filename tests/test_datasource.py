@@ -224,9 +224,12 @@ def test_read_orc_dir_and_orcx_plan_identical_splits(spark_ds, orc_dir,
     monkeypatch.setattr(jor, "DISTRIBUTED_PLANNING_THRESHOLD", threshold)
     planned = []
     plan = jor.plan_orc_splits
-    monkeypatch.setattr(jor, "plan_orc_splits",
-                        lambda *a, **k: planned.append(plan(*a, **k))
-                        or planned[-1])
+
+    def recording_plan(*a, **k):
+        planned.append(plan(*a, **k))
+        return planned[-1]
+
+    monkeypatch.setattr(jor, "plan_orc_splits", recording_plan)
     filters = [("n_tok", ">=", 1200)]
     got = jor.read_orc_dir(spark_ds, orc_dir, filters=filters)
     orcx = OrcEngineReader(orc_dir, None, {

@@ -225,6 +225,12 @@ def test_fully_pruned_file_emits_typed_empty_batch(spark):
     got = read_orc_dir(spark, out, columns=["id", "s"], filters=filters)
     assert got.count() == 100
     assert got.agg(F.min("id")).first()[0] == n - 100
+    # every file pruned: no split, still a typed empty DataFrame
+    assert plan_orc_splits(files, [("id", ">=", n)]) == []
+    none = read_orc_dir(spark, out, columns=["id", "s"],
+                        filters=[("id", ">=", n)])
+    assert none.dtypes == [("id", "bigint"), ("s", "string")]
+    assert none.count() == 0
 
 
 # --- orc-core Java (spark.write.orc) interop --------------------------
