@@ -691,7 +691,7 @@ def _q_orc_in_scan(spark, sf_dir):
     member list prunes as a disjunction of equalities at the stripe-
     stats, row-group-stats and bloom tiers
     (engine/orc_read.py::_stats_may_match / row_groups_matching), and
-    read_orc_dir re-applies it exactly with isin. Unsorted doc_id
+    read_orc_dir applies it exactly in the decode task. Unsorted doc_id
     strings make the blooms the only pruning surface for the string
     member; sorted n_tok makes the stats tiers bite for the others."""
     import tempfile

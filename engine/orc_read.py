@@ -289,7 +289,8 @@ class OrcFileInfo:
             return pa.dense_union(
                 [pa.field(f"_union_{i}", self.arrow_type(s))
                  for i, s in enumerate(t.subtypes)])
-        raise NotImplementedError(f"ORC type kind {k} is not "
+        name = {19: " (GEOMETRY)", 20: " (GEOGRAPHY)"}.get(k, "")
+        raise NotImplementedError(f"ORC type kind {k}{name} is not "
                                   "readable by this reader")
 
     def schema(self) -> pa.Schema:
@@ -497,6 +498,13 @@ def _stats_may_match(st: dict | None, op: str, val) -> bool:
             not isinstance(val, type(mn)) and \
             not (isinstance(val, num) and isinstance(mn, num)):
         return True         # unprunable: keep
+    s = st.get("sum")
+    if mn != mn or mx != mx or s != s:
+        # a unit holding a NaN (NaN sum) has untrustworthy double
+        # bounds: ORC C++ seeds min/max with a unit's first value, so a
+        # leading NaN makes them NaN, and a stripe merged from such a
+        # row group skips that group's values
+        return True
     if isinstance(mn, decimal.Decimal) and isinstance(val, float):
         # Spark/DuckDB compare decimal vs double by CASTING the
         # decimal to double, so prune in the double domain: float()

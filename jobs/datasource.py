@@ -190,16 +190,14 @@ class OrcEngineDataSource(DataSource):
     (true: read exactly the ``_SUCCESS``-committed snapshot instead
     of the directory listing — stragglers and in-progress jobs in the
     same directory are invisible), ``filters`` (JSON conjunction of
-    ``[column, op, literal]`` triples, ops ``= < <= > >= in
-    starts_with`` plus the valueless ``is_null`` / ``not_null`` —
-    nullness prunes via the hasNull/numberOfValues ColumnStatistics
-    slots, ``starts_with`` via string min/max prefix ranges; nested
-    fields as dotted paths). Explicit ``filters`` prune
-    stripes/row-groups like pushed filters do, but live on THIS
-    load()'s options — no global pushdown conf, no plan-reuse hazard
-    — and are re-applied EXACTLY on the decoded batches inside
-    ``read()``, so results match the predicate even though the engine
-    tiers prune at stripe/row-group granularity.
+    ``[column, op, literal]`` triples, bound on the planning side by
+    jobs.orc_read.bind_filters against the unprojected file schema:
+    the ops, literal typing and errors of read_orc_dir). Explicit
+    ``filters`` prune stripes/row-groups like pushed filters do, but
+    live on THIS load()'s options — no global pushdown conf, no
+    plan-reuse hazard — and ``read()`` applies them exactly to the
+    decoded Arrow batches. Pushed Catalyst filters only prune: Spark
+    re-applies them itself.
 
     Write options: ``compression`` (zlib default | snappy | lz4 |
     zstd | brotli | none), ``stripe_rows``, ``row_index_stride``,
@@ -219,23 +217,9 @@ class OrcEngineDataSource(DataSource):
         return p
 
     def schema(self):
-        from engine.orc_read import read_orc_tail
-        from jobs.orc_read import list_orc_files
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        use_m = self.options.get("use_manifest", "false").lower() == "true"
-        files = list_orc_files(self._path(), use_manifest=use_m)
-        if _merge_schema(self.options):
-            # probe EVERY tail: union-of-fields, widest-of-types
-            # (int widening + float->double, orc-core
-            # ConvertTreeReader semantics). Threaded here — DSv2
-            # schema() runs in the planning worker, which has no
-            # SparkSession to distribute through; the per-file cast
-            # up to this schema happens task-side in _read_split.
-            from jobs.orc_read import merged_orc_schema
-            arrow = merged_orc_schema(files, spark=None)
-        else:
-            arrow = read_orc_tail(files[0]).schema()
+        arrow = _file_schema(self._path(), self.options)
         cols = self.options.get("columns")
         if cols:
             names = [c.strip() for c in cols.split(",") if c.strip()]
@@ -273,32 +257,41 @@ def _merge_schema(options) -> bool:
     return options.get("merge_schema", "false").lower() == "true"
 
 
-def _parse_option_filters(options) -> list[tuple]:
+def _file_schema(path: str, options):
+    """The unprojected Arrow schema of a load: the first file's tail,
+    or with ``merge_schema`` every tail merged (union of fields,
+    widest of types; orc-core ConvertTreeReader semantics). Threaded
+    here — DSv2 schema() and reader() run in the planning worker,
+    which has no SparkSession to distribute through; the per-file
+    cast up to this schema happens task-side in read_split."""
+    from engine.orc_read import read_orc_tail
+    from jobs.orc_read import list_orc_files, merged_orc_schema
+
+    use_m = options.get("use_manifest", "false").lower() == "true"
+    files = list_orc_files(path, use_manifest=use_m)
+    if _merge_schema(options):
+        return merged_orc_schema(files, spark=None)
+    return read_orc_tail(files[0]).schema()
+
+
+def _parse_option_filters(path: str, options) -> list[tuple]:
     """The ``filters`` read option: a JSON list of [column, op,
-    literal] triples (conjunction)."""
+    literal] triples, bound by jobs.orc_read.bind_filters against the
+    unprojected file schema (so filters on non-projected columns type
+    too). A load with no .orc file binds against an empty schema:
+    the ops are still checked, and the scan is empty anyway."""
+    import pyarrow as pa
+
+    from jobs.orc_read import EmptyOrcDirError, bind_filters
+
     raw = options.get("filters")
     if not raw:
         return []
-    spec = json.loads(raw)
-    out = []
-    for item in spec:
-        col, op = item[0], item[1]
-        val = item[2] if len(item) > 2 else None
-        if op in ("is_null", "not_null"):
-            out.append((col, op, None))
-        elif op in ("=", "==", "<", "<=", ">", ">=", "in",
-                    "starts_with"):
-            if val is None:
-                # fail loud at planning: a missing/null literal would
-                # silently match zero rows downstream (SQL NULL
-                # comparison semantics via an all-null Arrow mask)
-                raise ValueError(
-                    f"filters option: op {op!r} on {col!r} needs a "
-                    "literal — [column, op, value]")
-            out.append((col, op, tuple(val) if op == "in" else val))
-        else:
-            raise ValueError(f"filters option: unsupported op {op!r}")
-    return out
+    try:
+        schema = _file_schema(path, options)
+    except EmptyOrcDirError:
+        schema = pa.schema([])
+    return bind_filters(json.loads(raw), schema)
 
 
 class OrcEngineReader(DataSourceReader):
@@ -307,7 +300,7 @@ class OrcEngineReader(DataSourceReader):
         self._schema = schema
         self._options = options
         self._filters: list[tuple] = []
-        self._opt_filters = _parse_option_filters(options)
+        self._opt_filters = _parse_option_filters(path, options)
 
     def _all_filters(self) -> list[tuple]:
         return self._filters + self._opt_filters

@@ -23,6 +23,14 @@ One Spark stage, no shuffle, and no row passes through the driver:
    (engine.orc_read.read_orc_stripes), so a file split 100 ways costs
    each task 1/100th of its bytes. Column projection skips unprojected
    streams entirely (never inflated).
+3. **Filter** — bind_filters is the one definition of the
+   ``[(column, op, literal)]`` conjunction: it checks the ops and
+   literals on the driver and types string literals against the file
+   schema. The bound list prunes stripes at planning and row groups
+   in the task (engine.orc_read, superset tiers), and the same task
+   then applies it exactly to the decoded Arrow table, before any row
+   crosses into the JVM. read_orc_dir and the orcx ``filters`` option
+   both go through it.
 
 The decoders are this engine's vectorized codecs, so files written by
 ORC C++ (pyarrow), orc-core Java (spark.write.orc), or
@@ -40,7 +48,10 @@ import glob
 import os
 from dataclasses import dataclass, field
 
+import decimal
+
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import InputPartition
 from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
@@ -194,6 +205,92 @@ def merged_orc_schema(files: list[str],
     return pa.schema(list(fields.items()))
 
 
+# the filter ops and the exact Arrow evaluator of each (bind_filters,
+# _apply_filters_exact)
+_EXACT_OPS = {
+    "=": pc.equal, "<": pc.less, "<=": pc.less_equal,
+    ">": pc.greater, ">=": pc.greater_equal,
+    "in": lambda a, v: pc.is_in(a, value_set=pa.array(list(v))),
+    "starts_with": lambda a, v: pc.starts_with(a, pattern=v),
+    "is_null": lambda a, _: pc.is_null(a),
+    "not_null": lambda a, _: pc.is_valid(a),
+}
+
+
+def bind_filters(filters, schema: pa.Schema) -> list[tuple]:
+    """Check a ``filters`` conjunction of ``(column, op, literal)``
+    items (lists from JSON too) and bind it to ``schema``: the one
+    place that defines the ops and literal rules, shared by
+    read_orc_dir, the orcx ``filters`` option and import-orc.
+
+    Ops are ``= < <= > >= in starts_with`` and the valueless
+    ``is_null`` / ``not_null``; ``==`` binds as ``=``. A dotted column
+    (``meta.score``) names a struct field. A ``str`` literal converts
+    to the column's type — int for integer and date kinds, float for
+    floating kinds, Decimal for decimals; other literals,
+    ``starts_with`` prefixes and columns ``schema`` does not resolve
+    pass through. ``in`` members become a tuple. Raises ValueError for
+    an unknown op, a valued op with no literal, or a string that does
+    not parse as the column's type."""
+    bound = []
+    for item in filters or ():
+        col, op = item[0], item[1]
+        val = item[2] if len(item) > 2 else None
+        op = "=" if op == "==" else op
+        if op not in _EXACT_OPS:
+            raise ValueError(f"filters: unsupported op {op!r}")
+        if op in ("is_null", "not_null"):
+            bound.append((col, op, None))
+            continue
+        if val is None:
+            # a missing literal would compare NULL and silently match
+            # no row
+            raise ValueError(f"filters: op {op!r} on {col!r} needs a "
+                             "literal — [column, op, value]")
+        if op != "starts_with":
+            typ = _column_type(schema, col)
+            val = tuple(_typed_literal(m, typ, col) for m in val) \
+                if op == "in" else _typed_literal(val, typ, col)
+        bound.append((col, op, val))
+    return bound
+
+
+def _column_type(schema: pa.Schema, name: str) -> pa.DataType | None:
+    """The type of a filter column: an exact top-level field first,
+    else a dotted path through struct fields; None if neither."""
+    i = schema.get_field_index(name)
+    if i >= 0:
+        return schema.field(i).type
+    typ, fields = None, list(schema)
+    for part in name.split("."):
+        match = [f for f in fields if f.name == part]
+        if not match:
+            return None
+        typ = match[0].type
+        fields = list(typ) if pa.types.is_struct(typ) else []
+    return typ
+
+
+def _typed_literal(val, typ: pa.DataType | None, col: str):
+    if not isinstance(val, str) or typ is None:
+        return val
+    if pa.types.is_integer(typ) or pa.types.is_date(typ):
+        cast = int
+    elif pa.types.is_floating(typ):
+        cast = float
+    elif pa.types.is_decimal(typ):
+        # a Decimal (not str) literal engages the decimal stats and
+        # bloom tiers
+        cast = decimal.Decimal
+    else:
+        return val
+    try:
+        return cast(val)
+    except (ValueError, ArithmeticError):
+        raise ValueError(f"filters: literal {val!r} on {col!r} is not "
+                         f"a {typ} value") from None
+
+
 @dataclass
 class OrcInputPartition(InputPartition):
     """One read split: a run of surviving stripes of one file, their
@@ -303,10 +400,10 @@ def read_split(split: OrcInputPartition | OrcRangePartition, schema,
     """Task-side decode of one planned split, shared by read_orc_dir
     and the orcx batch and stream readers: byte range -> its stripes
     (resolve_range) -> engine stripe-range read (``filters`` prune row
-    groups as a superset) -> null-fill of columns the file predates
-    (only with ``allow_missing``) -> EXACT arrow-side application of
-    ``exact_filters`` (a conjunction Spark knows nothing about) ->
-    cast to the Spark ``schema``'s Arrow convention -> RecordBatches.
+    groups as a superset) -> EXACT Arrow-side application of
+    ``exact_filters`` (bound by bind_filters) -> null-fill of columns
+    the file predates (only with ``allow_missing``) -> cast to the
+    Spark ``schema``'s Arrow convention -> RecordBatches.
     ``convention``: pre-1970 timestamp convention (default per file)."""
     from engine.orc_read import read_orc_stripes
 
@@ -322,31 +419,30 @@ def read_split(split: OrcInputPartition | OrcRangePartition, schema,
     info = info or split.tail_info()
     names = list(target.names)
     got = info.types[0].field_names
-    absent = [c for c in names if c not in got]
-    if absent and not allow_missing:
-        raise ValueError(
-            f"{split.path}: ORC schema {got} lacks projected {names}; "
-            "to null-fill columns this file predates, pass "
-            "allow_missing_columns=True (read_orc_dir) or set "
-            "merge_schema=true (orcx)")
-    # an option filter may reference a non-projected column: decode
-    # its top-level root too, filter exactly, then drop it. A filter
-    # on a column the file PREDATES sees null for every row: is_null
-    # is vacuously true (drop the conjunct), everything else —
-    # comparisons AND not_null — matches no row (empty split).
-    absent_col = [f for f in exact_filters
-                  if (f[0] if f[0] in got else f[0].split(".")[0])
-                  not in got]
-    if any(f[1] != "is_null" for f in absent_col):
-        yield from target.empty_table().to_batches()
-        return
-    exact_filters = [f for f in exact_filters if f not in absent_col]
+    # a filter may reference a non-projected column: decode its
+    # top-level root too, filter exactly, then drop it
     roots = [f[0] if f[0] in got else f[0].split(".")[0]
              for f in exact_filters]
+    absent = [c for c in names if c not in got]
+    if not allow_missing and (absent or not set(roots) <= set(got)):
+        raise ValueError(
+            f"{split.path}: ORC schema {got} lacks projected or "
+            f"filtered {names + roots}; to null-fill columns this file "
+            "predates, pass allow_missing_columns=True (read_orc_dir) "
+            "or set merge_schema=true (orcx)")
+    # a filter on a column the file PREDATES sees null for every row:
+    # is_null is vacuously true (drop the conjunct), everything else —
+    # comparisons AND not_null — matches no row (empty split)
+    if any(f[1] != "is_null" for f, r in zip(exact_filters, roots)
+           if r not in got):
+        yield from target.empty_table().to_batches()
+        return
+    exact_filters = [f for f, r in zip(exact_filters, roots) if r in got]
     # dict.fromkeys: two filters on one non-projected column (the
     # classic range filter lo <= c <= hi) must add its root ONCE — a
     # duplicated projection column makes tbl.column() ambiguous
-    extra = list(dict.fromkeys(r for r in roots if r not in names))
+    extra = list(dict.fromkeys(r for r in roots
+                               if r in got and r not in names))
     tbl = read_orc_stripes(
         split.path, list(split.stripes),
         columns=[c for c in names if c not in absent] + extra,
@@ -360,33 +456,14 @@ def read_split(split: OrcInputPartition | OrcRangePartition, schema,
 
 
 def _apply_filters_exact(tbl, filters: list[tuple]):
-    """Exact arrow-side conjunction filter (SQL null semantics: a
-    null comparison never matches). Dotted names resolve through
-    struct fields."""
-    import pyarrow.compute as pc
+    """Exact Arrow-side conjunction of bind_filters output: a null
+    never matches, and neither does a NaN in a comparison. Dotted
+    names resolve through struct fields."""
     mask = None
     for col, op, val in filters:
         arr = tbl.column(col) if "." not in col else pc.struct_field(
             tbl.column(col.split(".")[0]), col.split(".")[1:])
-        if op == "is_null":
-            m = pc.is_null(arr)
-        elif op == "not_null":
-            m = pc.is_valid(arr)
-        elif op in ("=", "=="):
-            m = pc.equal(arr, val)
-        elif op == "<":
-            m = pc.less(arr, val)
-        elif op == "<=":
-            m = pc.less_equal(arr, val)
-        elif op == ">":
-            m = pc.greater(arr, val)
-        elif op == ">=":
-            m = pc.greater_equal(arr, val)
-        elif op == "starts_with":
-            m = pc.starts_with(arr, pattern=val)
-        else:  # in
-            m = pc.is_in(arr, value_set=pa.array(list(val)))
-        m = pc.fill_null(m, False)
+        m = pc.fill_null(_EXACT_OPS[op](arr, val), False)
         mask = m if mask is None else pc.and_(mask, m)
     return tbl.filter(mask) if mask is not None else tbl
 
@@ -545,18 +622,21 @@ def read_orc_dir(spark: SparkSession, path: str,
     job above 64 files, so the driver never fans a huge listing
     through threads.
 
-    ``filters``: [(column, op, literal)] conjunction pushed down in
-    THREE tiers — planning drops statistics-precluded stripes before
-    any stripe byte is read (engine.orc_read.stripes_matching); each
-    decode task then drops statistics-precluded ROW GROUPS inside its
-    stripes and seeks directly to the survivors via the ROW_INDEX
-    positions (engine.orc_read.row_groups_matching); finally the same
-    predicates re-apply as an exact Spark filter on the decoded rows,
-    so the result is exact, not a superset. Filter columns are
-    auto-added to the decode projection if missing from ``columns``
-    (and pruned from the result); a dotted filter column
-    (``meta.score``) prunes on the nested field's own statistics and
-    projects its top-level root struct.
+    ``filters``: [(column, op, literal)] conjunction, checked and
+    typed on the driver by bind_filters against the probed (or
+    merged) schema before projection; a filter column that schema
+    lacks raises KeyError. It prunes in two superset tiers — planning
+    drops statistics-precluded stripes before any stripe byte is read
+    (engine.orc_read.stripes_matching), and each decode task drops
+    statistics- and bloom-precluded ROW GROUPS inside its stripes,
+    seeking to the survivors via the ROW_INDEX positions
+    (engine.orc_read.row_groups_matching) — and then the decode task
+    applies it exactly to the decoded Arrow table, so the result is
+    exact, not a superset. A filter column need not be in ``columns``;
+    a dotted filter column (``meta.score``) prunes on the nested
+    field's own statistics. The exact filter has Arrow semantics: a
+    null never matches, and NaN matches no comparison (Spark SQL
+    instead orders NaN above every number).
 
     One Spark stage, no shuffle (module docstring): plan_orc_splits
     plans on the driver — threaded tail reads and stripe pruning up to
@@ -572,18 +652,14 @@ def read_orc_dir(spark: SparkSession, path: str,
         allow_missing_columns = True
     else:
         arrow_schema = read_orc_tail(files[0]).schema()
-    out_columns = columns
-    if columns is not None and filters:
-        # a nested filter column projects its top-level root struct
-        roots = [f[0] if arrow_schema.get_field_index(f[0]) >= 0
-                 else f[0].split(".")[0] for f in filters]
-        # dict.fromkeys: a range filter contributes its column once
-        columns = columns + list(dict.fromkeys(
-            r for r in roots if r not in columns))
+    filters = bind_filters(filters, arrow_schema)
+    missing = [c for c in columns or ()
+               if arrow_schema.get_field_index(c) < 0]
+    missing += [f[0] for f in filters
+                if _column_type(arrow_schema, f[0]) is None]
+    if missing:
+        raise KeyError(f"columns not in ORC schema: {missing}")
     if columns is not None:
-        missing = [c for c in columns if arrow_schema.get_field_index(c) < 0]
-        if missing:
-            raise KeyError(f"columns not in ORC schema: {missing}")
         arrow_schema = pa.schema(
             [arrow_schema.field(c) for c in columns])
     # prefer_timestamp_ntz=False: Spark's own ORC reader maps the
@@ -595,41 +671,6 @@ def read_orc_dir(spark: SparkSession, path: str,
 
     def decode(split):
         return read_split(split, spark_schema, filters, convention,
-                          allow_missing_columns)
+                          allow_missing_columns, exact_filters=filters)
 
-    out = _map_in_tasks(spark, splits, decode, spark_schema, parallelism)
-    if filters:
-        out = out.where(_filter_column(filters))
-    if out_columns is not None and out_columns != columns:
-        out = out.select(*out_columns)
-    return out
-
-
-def _filter_column(filters: list[tuple]):
-    """The exact Spark predicate equivalent to the pruning filters."""
-    from pyspark.sql import functions as F
-    cond = None
-    for name, op, val in filters:
-        c = F.col(name)
-        if op == "is_null":
-            e = c.isNull()
-        elif op == "not_null":
-            e = c.isNotNull()
-        elif op in ("=", "=="):
-            e = c == val
-        elif op == "in":
-            e = c.isin(list(val))
-        elif op == "starts_with":
-            e = c.startswith(val)
-        elif op == "<":
-            e = c < val
-        elif op == "<=":
-            e = c <= val
-        elif op == ">":
-            e = c > val
-        elif op == ">=":
-            e = c >= val
-        else:
-            raise ValueError(f"unsupported filter op {op!r}")
-        cond = e if cond is None else cond & e
-    return cond
+    return _map_in_tasks(spark, splits, decode, spark_schema, parallelism)

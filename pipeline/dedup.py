@@ -169,54 +169,54 @@ def simhash(col, bits: int = 64, seed: int = 0):
     """One 64-bit SimHash limb of the whitespace words of a text
     column: each word votes its hash bits +-1; signature bit = sign of
     the sum. ``seed`` picks an independent word-hash stream — the
-    128-bit signature is two limbs (seed 0 and 1). The per-bit
-    expressions are built with Python loops (bit index is
-    compile-time), so everything stays a codegen'd column expression."""
-    words = F.split(F.trim(col), "\\s+")
+    128-bit signature is two limbs (seed 0 and 1). Bit i is tested
+    with the constant mask 1 << i (an array literal), so the
+    expression tree stays a few dozen nodes whatever ``bits`` is."""
+    masks = F.array(*[F.lit(1 << i if i < 63 else -(1 << 63)).cast("long")
+                      for i in range(bits)])
 
     def word_bits(w):
         h = F.xxhash64(w) if seed == 0 else F.xxhash64(w, F.lit(seed))
-        return F.array(*[
-            (F.shiftright(h, i).bitwiseAND(F.lit(1))
-             .cast("int") * 2 - 1) for i in range(bits)])
+        return F.transform(masks, lambda m: F.when(
+            h.bitwiseAND(m) != 0, 1).otherwise(-1))
 
-    votes = F.aggregate(
-        words,
-        F.array_repeat(F.lit(0).cast("int"), bits),
-        lambda acc, w: F.zip_with(acc, word_bits(w), lambda x, y: x + y))
-    sig = F.lit(0).cast("long")
-    for i in range(bits):
-        sig = sig.bitwiseOR(
-            F.when(F.element_at(votes, i + 1) > 0,
-                   F.lit(1 << i if i < 63 else -(1 << 63)).cast("long"))
-            .otherwise(F.lit(0).cast("long")))
-    return sig
+    votes = _votes(F.split(F.trim(col), "\\s+"), word_bits, bits)
+    return F.aggregate(
+        F.arrays_zip(votes.alias("v"), masks.alias("m")),
+        F.lit(0).cast("long"),
+        lambda sig, z: sig.bitwiseOR(
+            F.when(z["v"] > 0, z["m"]).otherwise(F.lit(0).cast("long"))))
 
 
 def simhash_bitstring(col, bits: int = SIMHASH_BITS) -> Column:
     """Portable SimHash: signature as a ``bits``-char '0'/'1' string
     (default 128 — all 32 md5 hex digits). Word-hash bit i = bit
     (i % 4) of hex digit (i // 4) of md5(word) — md5 / substr / instr
-    only, so DuckDB reproduces it exactly."""
-    words = F.split(F.trim(col), "\\s+")
+    only, so DuckDB reproduces it exactly. Each word's md5 is computed
+    once."""
+    masks = F.array(*[F.lit(1 << (i % 4)) for i in range(bits)])
 
-    def word_bits(w):
-        out = []
-        for i in range(bits):
-            digit = (F.instr(F.lit("0123456789abcdef"),
-                             F.substring(F.md5(w), 1 + i // 4, 1))
-                     .cast("int") - 1)
-            out.append((F.shiftright(digit, i % 4).bitwiseAND(F.lit(1)))
-                       * 2 - 1)
-        return F.array(*out)
+    def word_bits(h):
+        return F.transform(masks, lambda m, i: F.when(
+            (F.instr(F.lit("0123456789abcdef"),
+                     F.substring(h, F.floor(i / 4).cast("int") + 1,
+                                 F.lit(1))) - 1).bitwiseAND(m) != 0,
+            1).otherwise(-1))
 
-    votes = F.aggregate(
-        words,
-        F.array_repeat(F.lit(0).cast("int"), bits),
-        lambda acc, w: F.zip_with(acc, word_bits(w), lambda x, y: x + y))
-    return F.concat(*[
-        F.when(F.element_at(votes, i + 1) > 0, F.lit("1"))
-        .otherwise(F.lit("0")) for i in range(bits)])
+    votes = _votes(F.transform(F.split(F.trim(col), "\\s+"), F.md5),
+                   word_bits, bits)
+    return F.array_join(F.transform(
+        votes, lambda v: F.when(v > 0, "1").otherwise("0")), "")
+
+
+def _votes(words: Column, word_bits, bits: int) -> Column:
+    """Per-bit sums of every word's +-1 votes; all zeros for a null
+    text, so its signature is all zero bits."""
+    zero = F.array_repeat(F.lit(0).cast("int"), bits)
+    return F.coalesce(F.aggregate(
+        words, zero,
+        lambda acc, w: F.zip_with(acc, word_bits(w), lambda x, y: x + y)),
+        zero)
 
 
 def _simhash_banded(docs: DataFrame, text_col: str,

@@ -624,23 +624,102 @@ def test_stream_reader_same_mtime_cohort(tmp_path):
     assert rd.latestOffset() == off
 
 
-def test_range_filter_on_non_projected_column(spark_ds, orc_dir):
-    """TWO filters on one non-projected column (the classic range
-    filter) must add its root to the decode projection ONCE — the
-    duplicated-column bug made tbl.column() raise KeyError."""
-    import json as _json
-    df = (spark_ds.read.format("orcx").schema("doc_id string")
-          .option("filters", _json.dumps([["n_tok", ">=", 5],
-                                          ["n_tok", "<=", 10]]))
-          .load(orc_dir))
-    got = df.collect()
-    assert len(got) == 6 and df.columns == ["doc_id"]
-    # same latent pattern in the mapInArrow reader
+@pytest.fixture(scope="module")
+def filter_dirs(orc_dir, tmp_path_factory):
+    """The directories the filter matrix reads: ``flat`` (orc_dir),
+    ``nested`` (a struct column ``meta`` with ``score``/``tag``
+    members) and ``evolved`` (an old file that predates column ``v``
+    next to a new file that carries it, one null among its values)."""
+    nested = str(tmp_path_factory.mktemp("filters_nested"))
+    n = 400
+    write_orc(pa.table({
+        "id": pa.array(np.arange(n, dtype=np.int64)),
+        "meta": pa.array(
+            [{"score": i * 3, "tag": f"t{i % 7}"} for i in range(n)],
+            type=pa.struct([("score", pa.int64()), ("tag", pa.string())])),
+    }), os.path.join(nested, "part-0.orc"), stripe_rows=100,
+        row_index_stride=50)
+    evolved = str(tmp_path_factory.mktemp("filters_evolved"))
+    write_orc(pa.table({"doc_id": pa.array(["a", "b", "c"])}),
+              os.path.join(evolved, "0_old.orc"))
+    write_orc(pa.table({"doc_id": pa.array(["d", "e"]),
+                        "v": pa.array([7, None], type=pa.int64())}),
+              os.path.join(evolved, "1_new.orc"))
+    return {"flat": orc_dir, "nested": nested, "evolved": evolved}
+
+
+# (directory, projection, filters, merge schemas, matching rows)
+FILTER_MATRIX = {
+    "eq": ("flat", ["doc_id", "n_tok"], [["n_tok", "=", 7]], False, 1),
+    "in": ("flat", ["doc_id"], [["n_tok", "in", [3, 5, 1499]]], False, 3),
+    "starts_with": ("flat", None, [["doc_id", "starts_with", "doc-001"]],
+                    False, 100),
+    # TWO filters on one non-projected column (the classic range
+    # filter) must add its root to the decode projection ONCE — the
+    # duplicated-column bug made tbl.column() raise KeyError
+    "range_non_projected": ("flat", ["doc_id"], [["n_tok", ">=", 5],
+                                                 ["n_tok", "<=", 10]],
+                            False, 6),
+    "dotted_nested": ("nested", ["id"], [["meta.score", ">=", 1140],
+                                         ["meta.tag", "=", "t3"]],
+                      False, 3),
+    # the old file predates v: is_null keeps its rows, not_null none
+    "is_null_predated": ("evolved", ["doc_id"], [["v", "is_null"]],
+                         True, 4),
+    "not_null_predated": ("evolved", ["doc_id"], [["v", "not_null"]],
+                          True, 1),
+    # a string literal types as the int column's int
+    "str_literal_on_int": ("flat", ["doc_id", "n_tok"],
+                           [["n_tok", ">=", "1495"]], False, 5),
+}
+
+
+@pytest.mark.parametrize("case", list(FILTER_MATRIX))
+def test_filters_agree_across_surfaces(spark_ds, filter_dirs, case):
+    """read_orc_dir(filters=...) and the orcx ``filters`` option bind
+    through one binder and filter in the decode task: they return the
+    same rows, exactly the matching ones, with only the projected
+    columns."""
     from jobs.orc_read import read_orc_dir
-    eng = read_orc_dir(spark_ds, orc_dir, columns=["doc_id"],
-                       filters=[("n_tok", ">=", 5),
-                                ("n_tok", "<=", 10)])
-    assert eng.count() == 6 and eng.columns == ["doc_id"]
+    d, cols, filters, merge, want = FILTER_MATRIX[case]
+    d = filter_dirs[d]
+    rd = spark_ds.read.format("orcx").option("filters", json.dumps(filters))
+    if cols:
+        rd = rd.option("columns", ",".join(cols))
+    if merge:
+        rd = rd.option("merge_schema", "true")
+    df = rd.load(d)
+    eng = read_orc_dir(spark_ds, d, columns=cols, merge_schemas=merge,
+                       filters=[tuple(f) for f in filters])
+    got = sorted(map(tuple, df.collect()))
+    assert len(got) == want and eng.count() == want
+    assert sorted(map(tuple, eng.collect())) == got
+    assert df.columns == eng.columns == (cols or df.columns)
+
+
+@pytest.mark.parametrize("bad", [["n_tok", ">=", None], ["n_tok", "!=", 1]])
+def test_bad_filter_raises_same_error_on_both_surfaces(spark_ds, orc_dir,
+                                                       bad):
+    """A valued op with no literal and an unknown op raise the same
+    ValueError from read_orc_dir and orcx, while planning, before any
+    Spark job runs."""
+    from jobs.orc_read import bind_filters, read_orc_dir
+    with pytest.raises(ValueError) as want:
+        bind_filters([bad], pa.schema([]))
+    sc = spark_ds.sparkContext
+    sc.setJobGroup("bad-filter", "no job may run")
+    try:
+        with pytest.raises(ValueError) as eng:
+            read_orc_dir(spark_ds, orc_dir, filters=[tuple(bad)])
+        with pytest.raises(Exception) as ds:
+            (spark_ds.read.format("orcx")
+             .option("filters", json.dumps([bad])).load(orc_dir)
+             .collect())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert str(eng.value) == str(want.value)
+    assert f"ValueError: {want.value}" in str(ds.value)
+    assert list(sc.statusTracker().getJobIdsForGroup("bad-filter")) == []
 
 
 def test_empty_directory_fails_loud_or_scans_empty(spark_ds, tmp_path):

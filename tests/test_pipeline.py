@@ -307,9 +307,11 @@ def test_submit_import_orc_typed_filters(spark, token_parquet, tmp_path):
     assert spark.read.parquet(out2).count() == 1
     # the regression shape: a digit-only literal on a STRING column
     # stays str; numeric strings on int columns coerce to int
-    from jobs.submit import _type_filter_literals
-    typed = _type_filter_literals(
-        orcdir, [("doc_id", "=", "123"), ("n_tok", ">=", "100")])
+    from engine.orc_read import read_orc_tail
+    from jobs.orc_read import bind_filters, list_orc_files
+    typed = bind_filters(
+        [("doc_id", "=", "123"), ("n_tok", ">=", "100")],
+        read_orc_tail(list_orc_files(orcdir)[0]).schema())
     assert typed == [("doc_id", "=", "123"), ("n_tok", ">=", 100)]
 
 
@@ -325,8 +327,8 @@ def test_submit_import_orc_merge_schemas(spark, token_parquet,
 
     from pyspark.sql import functions as F
 
+    from jobs.orc_read import bind_filters, list_orc_files, merged_orc_schema
     from jobs.orc_write import write_orc_dir
-    from jobs.submit import _type_filter_literals
     from jobs.submit import main as submit_main
 
     tok = spark.read.parquet(token_parquet).select("doc_id", "n_tok")
@@ -346,8 +348,8 @@ def test_submit_import_orc_merge_schemas(spark, token_parquet,
             shutil.move(f, f"{d}/gen{i}-{os.path.basename(f)}")
     # literal on the generation-1-only column types as int via the
     # merged schema (first-file probe would pass it through as str)
-    typed = _type_filter_literals(d, [("flag", ">=", "100")],
-                                  merge_schemas=True)
+    typed = bind_filters([("flag", ">=", "100")],
+                         merged_orc_schema(list_orc_files(d)))
     assert typed == [("flag", ">=", 100)]
     out = str(tmp_path / "imp")
     rc = submit_main(["import-orc", "--input", d, "--output", out,

@@ -8,10 +8,11 @@ independent invariants against ORC C++ (pyarrow.orc):
   B. ORC C++ write    -> engine read_orc == original  (reader interop)
   C. engine write_orc -> engine read_orc == original  (self round-trip,
      covers codecs/conventions the fuzz pool can't route through C++)
-  D. engine read_orc(filters=...) returns a SUPERSET of the exact
-     matches, and applying the exact predicate to the pruned batch
-     equals applying it to the original (statistics/bloom pruning
-     never drops a matching row).
+  D. engine read_orc(filters=...) on an integer, floating or string
+     column of the engine file and of the ORC C++ file returns a
+     SUPERSET of the exact matches, and applying the exact predicate
+     to the pruned batch equals applying it to the original
+     (statistics/bloom pruning never drops a matching row).
   E. the table split into random chunks, each written by the engine,
      zero-decode-concatenated (engine.orc_concat.concat_orc), then
      read back by BOTH readers == original (compactor interop).
@@ -292,7 +293,8 @@ _OPS = ["=", ">", ">=", "<", "<=", "is_null", "not_null", "in",
 def _check_filters(t: pa.Table, path: str, rng) -> str | None:
     """Direction D: pruned read must be a superset of exact matches."""
     cands = [f for f in t.schema
-             if pa.types.is_integer(f.type) or pa.types.is_string(f.type)]
+             if pa.types.is_integer(f.type) or pa.types.is_string(f.type)
+             or pa.types.is_floating(f.type)]
     if not cands or t.num_rows == 0:
         return None
     f = cands[int(rng.integers(0, len(cands)))]
@@ -377,6 +379,13 @@ def run_seed(seed: int) -> list[str]:
                 fails.append(f"B(cpp->engine): {diff}")
         except Exception:
             fails.append("B raised: " + traceback.format_exc(limit=3))
+        # D again on the C++ file: its statistics, not the engine's
+        try:
+            diff = _check_filters(t, cp, rng)
+            if diff:
+                fails.append(f"D(filters, cpp file): {diff}")
+        except Exception:
+            fails.append("D(cpp) raised: " + traceback.format_exc(limit=3))
         # F: projection + stripe-subset reads on the engine file
         try:
             from engine.orc_read import read_orc_info
